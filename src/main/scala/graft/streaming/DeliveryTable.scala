@@ -1,7 +1,22 @@
 package graft.streaming
 
+import java.io.{FileNotFoundException, IOException}
+
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.{ChunkMeta, DeliveryChunk}
 
 /** The distributed half of the delivery ledger: chunk PAYLOADS
   * (subject, resourceId rows) as a parquet dataset, in one of two
@@ -50,12 +65,14 @@ import org.apache.spark.sql.functions._
   * see [[DeliveryTable.withSeq]] for the ad-hoc fallback.
   */
 final class DeliveryTable(spark: SparkSession, val dir: String) {
-  import DeliveryTable.{esc, bucketOf}
+  import DeliveryTable.{Rec, esc, bucketOf}
 
-  private def fs = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
+  /** One Hadoop conf and FileSystem handle for the table's lifetime:
+    * `newHadoopConf()` copies the whole session conf, and the pull path
+    * runs once per consumer per pull window. */
+  private val hadoopConf = spark.sessionState.newHadoopConf()
+  private val root = new Path(dir)
+  private val fs: FileSystem = root.getFileSystem(hadoopConf)
 
   private val batchesDir = s"$dir/batches"
 
@@ -233,18 +250,17 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     * would resolve reads to the wrong dir and silently lose rows. */
   @volatile private var bucketsCache: Int = -1
 
-  private def bucketsMarker = new org.apache.hadoop.fs.Path(batchesDir, "_buckets")
+  private def bucketsMarker = new Path(batchesDir, "_buckets")
 
-  private def tableBuckets(filesystem: org.apache.hadoop.fs.FileSystem,
-                           requested: Int): Int = {
+  private def tableBuckets(requested: Int): Int = {
     if (bucketsCache > 0) return bucketsCache
     synchronized {
       if (bucketsCache > 0) return bucketsCache
       val b =
-        if (filesystem.exists(bucketsMarker)) readBucketsMarker(filesystem)
+        if (fs.exists(bucketsMarker)) readBucketsMarker()
         else {
-          filesystem.mkdirs(new org.apache.hadoop.fs.Path(batchesDir))
-          val out = filesystem.create(bucketsMarker, true)
+          fs.mkdirs(new Path(batchesDir))
+          val out = fs.create(bucketsMarker, true)
           try out.write(requested.toString.getBytes("UTF-8")) finally out.close()
           requested
         }
@@ -254,17 +270,17 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
   }
 
   /** Bucket count if any bucketed write ever happened here, else -1. */
-  private def bucketsIfAny(filesystem: org.apache.hadoop.fs.FileSystem): Int = {
+  private def bucketsIfAny(): Int = {
     if (bucketsCache > 0) return bucketsCache
-    if (!filesystem.exists(bucketsMarker)) return -1
+    if (!fs.exists(bucketsMarker)) return -1
     synchronized {
-      if (bucketsCache <= 0) bucketsCache = readBucketsMarker(filesystem)
+      if (bucketsCache <= 0) bucketsCache = readBucketsMarker()
       bucketsCache
     }
   }
 
-  private def readBucketsMarker(filesystem: org.apache.hadoop.fs.FileSystem): Int = {
-    val in = filesystem.open(bucketsMarker)
+  private def readBucketsMarker(): Int = {
+    val in = fs.open(bucketsMarker)
     try {
       // Loop to EOF: a single read() may legally return short (likelier
       // on object-store streams), truncating the digits into a WRONG
@@ -304,8 +320,7 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     * `buckets` only matters on the table's first bucketed write; after
     * that the persisted marker wins (see [[tableBuckets]]). */
   def writeBucketed(rows: DataFrame, batchSeq: Long, buckets: Int): Map[String, Long] = {
-    val (filesystem, _) = fs
-    val b = tableBuckets(filesystem, math.max(1, buckets))
+    val b = tableBuckets(math.max(1, buckets))
     // ONE JOB: the per-group counts ride the write via observe +
     // CountByKey (round-13's persist + second count job was a fixed
     // ~1.0–1.2 s per 250 ms trigger — VERDICT task 1). The observed
@@ -331,16 +346,16 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     // now — accumulated empties otherwise inflate every listChunks /
     // retention listStatus scan until retention runs (round-13 ADVICE).
     if (counts.isEmpty) {
-      filesystem.delete(new org.apache.hadoop.fs.Path(batchesDir, s"batch=$batchSeq"), true)
+      fs.delete(new Path(batchesDir, s"batch=$batchSeq"), true)
       ()
     }
     counts
   }
 
-  /** Fixed read schema (incl. the per-group layout's partition
-    * columns): hydration never pays footer-sampling schema inference,
-    * and an existing-but-empty dir reads as empty instead of failing
-    * inference. */
+  /** Fixed schema of [[chunkCounts]]' footer-count scan, incl. the
+    * per-group layout's partition columns: no footer-sampling schema
+    * inference, and an existing-but-empty dir reads as empty instead
+    * of failing inference. */
   private val readSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("subject", org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("resourceId", org.apache.spark.sql.types.StringType),
@@ -348,109 +363,120 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     org.apache.spark.sql.types.StructField("groupId", org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("chunkId", org.apache.spark.sql.types.StringType)))
 
-  /** Bucketed-layout data schema: groupId/chunkId are DATA columns
-    * there (batch/bucket are the partition dirs, never read back). */
-  private val bucketSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("groupId", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("chunkId", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("subject", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("resourceId", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("seq", org.apache.spark.sql.types.LongType)))
+  /** [[readChunks]] for chunks of the PER-GROUP layout only (no batch
+    * seq to resolve a bucketed chunk by). */
+  def read(groupId: String, chunkIds: Seq[String]): Map[String, (Seq[String], Seq[String])] =
+    load(groupId, chunkIds.map((_, None)))
 
-  /** Hydrate the payloads of `chunkIds` for `groupId` in ONE pruned
-    * scan: (chunkId → (subjects, resourceIds)), each in delivery order.
-    * PER-GROUP layout only — engines hydrate through [[readChunks]],
-    * which also resolves bucketed chunks via their batch seq. */
-  def read(groupId: String, chunkIds: Seq[String]): Map[String, (Seq[String], Seq[String])] = timed("read") {
-    val (filesystem, path) = fs
-    if (chunkIds.isEmpty || !filesystem.exists(path)) Map.empty
-    else readPruned(filesystem, path, groupId, chunkIds)
-  }
-
-  /** Consumer-pull hydration across BOTH layouts: each chunk arrives as
-    * (chunkId, batchSeq) — the two fields of its [[graft.core.ChunkMeta]].
-    * Per-group partition dirs are probed first (they exist exactly for
-    * chunks written in that layout); the rest resolve to
-    * `batches/batch=<seq>/bucket=<bucketOf(groupId)>` — ONE file read
-    * per pending batch, filtered to this group's rows. A table can hold
-    * both layouts at once (the engines switch regimes on registered
-    * group count), and this is the seam that makes the switch invisible
-    * to consumers. */
+  /** Consumer-pull hydration across BOTH layouts: (chunkId →
+    * (subjects, resourceIds)), each in delivery order. Each chunk
+    * arrives as (chunkId, batchSeq), the two fields of its
+    * [[graft.core.ChunkMeta]]. A table can hold both layouts at once
+    * (the engines switch regimes on registered group count), and this
+    * is the seam that makes the switch invisible to consumers.
+    *
+    * The read runs on the driver with parquet-hadoop and starts no
+    * Spark job. A pull wants a few rows out of files whose directory
+    * it already knows; as a Spark job it queued behind every other
+    * consumer's pull and the micro-batch on the shared scheduler
+    * (BASELINE.md, "Driver-side pull hydration"). Per chunk:
+    *  - list the per-group dir `groupId=…/chunkId=…` (it exists exactly
+    *    for chunks written in that layout, under the writer's escaping);
+    *  - otherwise list `batches/batch=<seq>/bucket=<bucketOf(groupId)>`
+    *    and read its files with a pushed-down `groupId` equality filter,
+    *    so row-group stats and dictionaries skip other groups' rows
+    *    once a bucket file holds several row groups;
+    *  - merge the rows of all part files by `seq`.
+    *
+    * A dir or part file that vanishes before or during the read (group
+    * drop, batch retention) makes the chunks read from it absent —
+    * never a partial chunk, never a failed pull. Any other read error
+    * (a truncated or corrupt part file) fails the pull with an
+    * IOException naming the file: a payload never reads as empty. */
   def readChunks(groupId: String,
-                 chunks: Seq[(String, Long)]): Map[String, (Seq[String], Seq[String])] = timed("read") {
-    val (filesystem, path) = fs
-    if (chunks.isEmpty || !filesystem.exists(path)) Map.empty
-    else {
-      val perGroup = readPruned(filesystem, path, groupId, chunks.map(_._1))
-      val missing = chunks.filterNot { case (c, _) => perGroup.contains(c) }
-      if (missing.isEmpty) perGroup
-      else perGroup ++ readBucketed(filesystem, groupId, missing)
+                 chunks: Seq[(String, Long)]): Map[String, (Seq[String], Seq[String])] =
+    load(groupId, chunks.map { case (c, s) => (c, Some(s)) })
+
+  /** Client-facing chunks for `metas`: the hydration step of every
+    * engine's pull, payloads from [[readChunks]]. A chunk whose payload
+    * is gone hydrates with no rows. */
+  def hydrate(groupId: String, metas: Seq[ChunkMeta]): Seq[DeliveryChunk] = {
+    val payload = readChunks(groupId, metas.map(m => (m.chunkId, m.batchId)))
+    metas.map { m =>
+      val (subjects, ids) = payload.getOrElse(m.chunkId, (Seq.empty, Seq.empty))
+      DeliveryChunk(m.groupId, m.chunkId, m.batchId, subjects, ids, m.deliveredAt, m.acked)
     }
   }
 
-  private def readBucketed(filesystem: org.apache.hadoop.fs.FileSystem, groupId: String,
-                           chunks: Seq[(String, Long)]): Map[String, (Seq[String], Seq[String])] = {
-    val b = bucketsIfAny(filesystem)
-    if (b <= 0) return Map.empty
-    val bucket = bucketOf(groupId, b)
-    val paths = chunks.map(_._2).distinct
-      .map(s => new org.apache.hadoop.fs.Path(batchesDir, s"batch=$s/bucket=$bucket"))
-      .filter(filesystem.exists)
-    if (paths.isEmpty) return Map.empty
-    val wanted = chunks.map(_._1).distinct
-    // Same churn-tolerance stance as the per-group path: exists-then-
-    // read is a TOCTOU window against batch retention, so the read also
-    // sets ignoreMissingFiles. groupId equality + chunkId IN push down
-    // to the parquet scan; the in-file groupId clustering gives
-    // row-group skipping once bucket files span several row groups.
-    spark.read.schema(bucketSchema)
-      .option("ignoreMissingFiles", true)
-      .parquet(paths.map(_.toString): _*)
-      .filter(col("groupId") === groupId && col("chunkId").isin(wanted: _*))
-      .select("chunkId", "subject", "resourceId", "seq")
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (cid, rs) =>
-        val ordered = rs.sortBy(_.getLong(3))
-        (cid, (ordered.map(_.getString(1)).toSeq, ordered.map(_.getString(2)).toSeq))
+  private def load(groupId: String, chunks: Seq[(String, Option[Long])])
+      : Map[String, (Seq[String], Seq[String])] = timed("read") {
+    val rows = mutable.HashMap.empty[String, mutable.ArrayBuffer[Rec]]
+    val inBuckets = chunks.distinctBy(_._1).filter { case (c, _) =>
+      val part = readParts(new Path(root, s"groupId=${esc(groupId)}/chunkId=${esc(c)}"), None)
+      part.foreach(rs => if (rs.nonEmpty) rows(c) = rs)
+      part.isEmpty
+    }
+    val b = if (inBuckets.exists(_._2.isDefined)) bucketsIfAny() else -1
+    if (b > 0) {
+      val bucket = bucketOf(groupId, b)
+      inBuckets.collect { case (c, Some(s)) => (s, c) }.groupMap(_._1)(_._2).foreach {
+        case (s, cs) =>
+          readParts(new Path(batchesDir, s"batch=$s/bucket=$bucket"), Some(groupId))
+            .foreach(_.foreach { r =>
+              if (cs.contains(r.chunkId)) rows.getOrElseUpdate(r.chunkId, mutable.ArrayBuffer.empty) += r
+            })
       }
+    }
+    rows.iterator.map { case (c, rs) =>
+      val ordered = rs.sortBy(_.seq)
+      (c, (ordered.map(_.subject).toSeq, ordered.map(_.resourceId).toSeq))
+    }.toMap
   }
 
-  private def readPruned(filesystem: org.apache.hadoop.fs.FileSystem,
-                         path: org.apache.hadoop.fs.Path, groupId: String,
-                         chunkIds: Seq[String]): Map[String, (Seq[String], Seq[String])] = {
-    // Read EXACTLY the requested chunk partitions as direct paths. The
-    // old root-dir read partition-PRUNED correctly but had to LIST the
-    // whole tree first — at thousands of groups that listing is itself
-    // a distributed job per pull (paths beyond the parallel-discovery
-    // threshold), it scales with the TOTAL group count instead of this
-    // consumer's outstanding chunks, and it races group-churn deletes
-    // of OTHER groups' dirs (task-time FileNotFound, surfaced by
-    // GroupScaleProbe at 10k groups with churn). Direct paths keep the
-    // pull O(this group's pending); the existence filter makes a
-    // concurrently-dropped chunk read as absent, never as a failed job
-    // — and because exists-then-read is a TOCTOU window (a chunk
-    // dropped between the filter and the job's file listing would
-    // still fail the job), the read also sets ignoreMissingFiles,
-    // scoped to this pull path only. Partition values are escaped the
-    // same way the parquet writer escapes them (space, ':', '%', '=',
-    // … land in %XX dirs), so caller-supplied group ids round-trip.
-    val chunkPaths = chunkIds.distinct
-      .map(c => new org.apache.hadoop.fs.Path(path,
-        s"groupId=${esc(groupId)}/chunkId=${esc(c)}"))
-      .filter(filesystem.exists)
-    if (chunkPaths.isEmpty) Map.empty
-    else spark.read.option("basePath", dir).schema(readSchema)
-      .option("ignoreMissingFiles", true)
-      .parquet(chunkPaths.map(_.toString): _*)
-      .select("chunkId", "subject", "resourceId", "seq")
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (cid, rs) =>
-        val ordered = rs.sortBy(_.getLong(3))
-        (cid, (ordered.map(_.getString(1)).toSeq, ordered.map(_.getString(2)).toSeq))
-      }
+  /** Rows of the parquet part files directly under `partDir` — only
+    * `groupId`'s rows when given (the bucketed layout, where groupId
+    * and chunkId are data columns) — or None when the dir or one of
+    * its files is gone. Hidden files (`_SUCCESS`, `.crc`) are skipped,
+    * as Spark's file index skips them. */
+  private def readParts(partDir: Path, groupId: Option[String]): Option[mutable.ArrayBuffer[Rec]] = {
+    val files =
+      try fs.listStatus(partDir)
+      catch { case _: FileNotFoundException => return None }
+    val filter = groupId.fold(FilterCompat.NOOP)(g =>
+      FilterCompat.get(FilterApi.eq(FilterApi.binaryColumn("groupId"), Binary.fromString(g))))
+    val out = mutable.ArrayBuffer.empty[Rec]
+    val complete = files.iterator
+      .filter { f => val n = f.getPath.getName; f.isFile && !n.startsWith("_") && !n.startsWith(".") }
+      .forall(readFile(_, filter, groupId.isDefined, out))
+    if (complete) Some(out) else None
   }
+
+  /** Appends one part file's rows to `out`; false when the file is gone. */
+  private def readFile(file: FileStatus, filter: FilterCompat.Filter, bucketed: Boolean,
+                       out: mutable.ArrayBuffer[Rec]): Boolean =
+    try {
+      val reader = new ParquetReader.Builder[Group](HadoopInputFile.fromStatus(file, hadoopConf)) {
+        override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport
+      }.withFilter(filter).build()
+      try {
+        var g = reader.read()
+        while (g != null) {
+          out += Rec(if (bucketed) g.getString("chunkId", 0) else null, g.getLong("seq", 0),
+            str(g, "subject"), str(g, "resourceId"))
+          g = reader.read()
+        }
+      } finally reader.close()
+      true
+    } catch {
+      case e: Exception
+          if Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(_.isInstanceOf[FileNotFoundException]) => false
+      case e: Exception =>
+        throw new IOException(s"unreadable delivery payload file ${file.getPath}", e)
+    }
+
+  private def str(g: Group, field: String): String =
+    if (g.getFieldRepetitionCount(field) == 0) null else g.getString(field, 0)
 
   /** Row counts of one batch's just-written chunks from parquet
     * METADATA only: a filesystem existence probe per candidate group
@@ -461,10 +487,8 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     * metadata, never from a second pass over the data. PER-GROUP
     * layout only (the bucketed writer returns counts directly). */
   def chunkCounts(groupIds: Seq[String], chunkIdFor: String => String): Map[String, Long] = timed("count") {
-    val (filesystem, path) = fs
     val present = groupIds.filter { g =>
-      filesystem.exists(new org.apache.hadoop.fs.Path(path,
-        s"groupId=${esc(g)}/chunkId=${esc(chunkIdFor(g))}"))
+      fs.exists(new Path(root, s"groupId=${esc(g)}/chunkId=${esc(chunkIdFor(g))}"))
     }
     if (present.isEmpty) Map.empty
     else {
@@ -485,41 +509,31 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     * pending + out-of-order-acked metas ([[ChunkLedger]]), so "all
     * chunks ever" is answered by the durable layer that actually
     * retains them. Per-group layout: one directory listing. Bucketed
-    * layout: one listing of the batch dirs + a distinct-chunkId scan
-    * of this group's bucket across them — a monitoring surface whose
-    * cost [[dropBatchesBefore]] retention bounds. */
+    * layout: one listing of the batch dirs + a driver-side read of this
+    * group's rows in its bucket across them (as [[readChunks]] reads) —
+    * a monitoring surface whose cost [[dropBatchesBefore]] retention
+    * bounds. */
   def listChunks(groupId: String): Seq[String] = {
-    val (filesystem, path) = fs
-    val gdir = new org.apache.hadoop.fs.Path(path, s"groupId=${esc(groupId)}")
+    val gdir = new Path(root, s"groupId=${esc(groupId)}")
     val perGroup =
-      if (!filesystem.exists(gdir)) Seq.empty[String]
-      else filesystem.listStatus(gdir).toSeq
+      if (!fs.exists(gdir)) Seq.empty[String]
+      else fs.listStatus(gdir).toSeq
         .filter(_.isDirectory)
         .map(_.getPath.getName)
         .filter(_.startsWith("chunkId="))
         .map(n => DeliveryTable.unesc(n.stripPrefix("chunkId=")))
-    perGroup ++ listBucketedChunks(filesystem, groupId)
+    perGroup ++ listBucketedChunks(groupId)
   }
 
-  private def listBucketedChunks(filesystem: org.apache.hadoop.fs.FileSystem,
-                                 groupId: String): Seq[String] = {
-    val b = bucketsIfAny(filesystem)
-    if (b <= 0) return Seq.empty
-    val bdir = new org.apache.hadoop.fs.Path(batchesDir)
-    if (!filesystem.exists(bdir)) return Seq.empty
+  private def listBucketedChunks(groupId: String): Seq[String] = {
+    val b = bucketsIfAny()
+    val bdir = new Path(batchesDir)
+    if (b <= 0 || !fs.exists(bdir)) return Seq.empty
     val bucket = bucketOf(groupId, b)
-    val paths = filesystem.listStatus(bdir).toSeq
-      .filter(_.isDirectory)
-      .filter(_.getPath.getName.startsWith("batch="))
-      .map(p => new org.apache.hadoop.fs.Path(p.getPath, s"bucket=$bucket"))
-      .filter(filesystem.exists)
-    if (paths.isEmpty) return Seq.empty
-    spark.read.schema(bucketSchema)
-      .option("ignoreMissingFiles", true)
-      .parquet(paths.map(_.toString): _*)
-      .filter(col("groupId") === groupId)
-      .select("chunkId").distinct()
-      .collect().map(_.getString(0)).toSeq
+    fs.listStatus(bdir).toSeq
+      .filter(p => p.isDirectory && p.getPath.getName.startsWith("batch="))
+      .flatMap(p => readParts(new Path(p.getPath, s"bucket=$bucket"), Some(groupId)).getOrElse(Nil))
+      .map(_.chunkId).distinct
   }
 
   /** Drop a group's payload partitions (group delete / retention).
@@ -531,9 +545,8 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     * makes: per-consumer deletes are metadata, storage reclaim is
     * retention. */
   def drop(groupId: String): Unit = {
-    val (filesystem, path) = fs
-    val gdir = new org.apache.hadoop.fs.Path(path, s"groupId=${esc(groupId)}")
-    if (filesystem.exists(gdir)) { filesystem.delete(gdir, true); () }
+    val gdir = new Path(root, s"groupId=${esc(groupId)}")
+    if (fs.exists(gdir)) { fs.delete(gdir, true); () }
   }
 
   /** Bucketed-layout retention: delete whole `batch=<seq>` dirs with
@@ -542,10 +555,9 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     * groups of (ledger watermark + 1); everything below is acked by
     * everyone. Returns the number of batch dirs removed. */
   def dropBatchesBefore(minSeq: Long): Int = {
-    val (filesystem, _) = fs
-    val bdir = new org.apache.hadoop.fs.Path(batchesDir)
-    if (!filesystem.exists(bdir)) return 0
-    val victims = filesystem.listStatus(bdir).toSeq
+    val bdir = new Path(batchesDir)
+    if (!fs.exists(bdir)) return 0
+    val victims = fs.listStatus(bdir).toSeq
       .filter(_.isDirectory)
       .map(_.getPath)
       .filter { p =>
@@ -554,12 +566,16 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
           (try n.stripPrefix("batch=").toLong < minSeq
            catch { case _: NumberFormatException => false })
       }
-    victims.foreach(filesystem.delete(_, true))
+    victims.foreach(fs.delete(_, true))
     victims.size
   }
 }
 
 object DeliveryTable {
+  /** One payload row; `chunkId` is null in per-group files, whose
+    * directory names their chunk. */
+  private final case class Rec(chunkId: String, seq: Long, subject: String, resourceId: String)
+
   /** Engine-owned scratch location for in-process/test wiring;
     * production passes a durable shared path instead. */
   def tempDir(): String =

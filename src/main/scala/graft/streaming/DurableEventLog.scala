@@ -503,20 +503,8 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
     table.dropBatchesBefore(math.min(floor, bound))
   }
 
-  /** Hydrate metas into client-facing chunks: ONE pruned read of the
-    * deliveries table covering all requested chunks (consumer pull);
-    * readChunks resolves each meta in whichever layout wrote it. */
-  private def hydrate(groupId: String, metas: Seq[ChunkMeta]): Seq[DeliveryChunk] = {
-    if (metas.isEmpty) return Seq.empty
-    val payload = table.readChunks(groupId, metas.map(m => (m.chunkId, m.batchId)))
-    metas.map { m =>
-      val (subjects, ids) = payload.getOrElse(m.chunkId, (Seq.empty, Seq.empty))
-      DeliveryChunk(m.groupId, m.chunkId, m.batchId, subjects, ids, m.deliveredAt, m.acked)
-    }
-  }
-
   def pendingChunks(groupId: String): Seq[DeliveryChunk] =
-    hydrate(groupId, ledger.pending(groupId))
+    table.hydrate(groupId, ledger.pending(groupId))
 
   /** Consumer pull with JetStream semantics (see [[EventEngine.pull]]):
     * disjoint claims across competing sessions, ack-wait redelivery
@@ -529,7 +517,7 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
       dispatcher.offer(groupId, sessionId, metas.map(_.chunkId), max).toSet
     for (c <- claimed; f <- dispatcher.flight(groupId, c))
       store.appendOffer(groupId, c, f.sessionId, f.offeredAt, f.deliveries)
-    hydrate(groupId, metas.filter(m => claimed.contains(m.chunkId)))
+    table.hydrate(groupId, metas.filter(m => claimed.contains(m.chunkId)))
   }
 
   /** Pending row count from driver metadata alone (no payload read). */
@@ -538,7 +526,7 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
   /** All chunks ever delivered (acked history re-listed from the
     * durable payload table — see [[EventEngine.historyMetas]]). */
   def deliveredChunks(groupId: String): Seq[DeliveryChunk] =
-    hydrate(groupId, EventEngine.historyMetas(
+    table.hydrate(groupId, EventEngine.historyMetas(
       groupId, ledger.pending(groupId), ledger.ackedResident(groupId),
       table.listChunks(groupId)))
 

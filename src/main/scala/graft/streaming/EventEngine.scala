@@ -260,24 +260,13 @@ final class EventEngine(val spark: SparkSession,
     queries.put(group.id, q)
   }
 
-  /** Hydrate metas into client-facing chunks: ONE pruned read of the
-    * deliveries table covering all requested chunks. */
-  private def hydrate(groupId: String, metas: Seq[ChunkMeta]): Seq[DeliveryChunk] = {
-    if (metas.isEmpty) return Seq.empty
-    val payload = table.readChunks(groupId, metas.map(m => (m.chunkId, m.batchId)))
-    metas.map { m =>
-      val (subjects, ids) = payload.getOrElse(m.chunkId, (Seq.empty, Seq.empty))
-      DeliveryChunk(m.groupId, m.chunkId, m.batchId, subjects, ids, m.deliveredAt, m.acked)
-    }
-  }
-
   /** Chunks delivered to a group and not yet acked — what a reconnecting
     * client receives again (at-least-once). Payloads are read back from
     * the deliveries table at PULL time (consumer-side materialization).
     * Monitoring/reconnect surface: bypasses flight bookkeeping; live
     * consumer sessions pull through [[pull]] instead. */
   def pendingChunks(groupId: String): Seq[DeliveryChunk] =
-    hydrate(groupId, ledger.pending(groupId))
+    table.hydrate(groupId, ledger.pending(groupId))
 
   /** Consumer pull with JetStream semantics: of the group's unacked
     * chunks, return those offerable to THIS session — not in flight
@@ -296,7 +285,7 @@ final class EventEngine(val spark: SparkSession,
       dispatcher.offer(groupId, sessionId, metas.map(_.chunkId), max).toSet
     for (st <- store; c <- claimed; f <- dispatcher.flight(groupId, c))
       st.appendOffer(groupId, c, f.sessionId, f.offeredAt, f.deliveries)
-    hydrate(groupId, metas.filter(m => claimed.contains(m.chunkId)))
+    table.hydrate(groupId, metas.filter(m => claimed.contains(m.chunkId)))
   }
 
   /** Pending row count from driver metadata alone — monitoring/backlog
@@ -310,7 +299,7 @@ final class EventEngine(val spark: SparkSession,
     * id's trailing sequence — a monitoring surface, not a replay
     * input). */
   def deliveredChunks(groupId: String): Seq[DeliveryChunk] =
-    hydrate(groupId, EventEngine.historyMetas(
+    table.hydrate(groupId, EventEngine.historyMetas(
       groupId, ledger.pending(groupId), ledger.ackedResident(groupId),
       table.listChunks(groupId)))
 

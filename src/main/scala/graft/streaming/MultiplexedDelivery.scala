@@ -343,12 +343,8 @@ final class MultiplexedDelivery(val spark: SparkSession,
           // changes, never its rows (dynamic overwrite replaces whole
           // chunk dirs).
           val seqNow = eventSeq.get
-          val estBatchEvents = seqNow - lastBatchEventSeq.getAndSet(seqNow)
-          val splitCap = math.max(1, parts / math.max(1, nGroups))
-          val splits =
-            if (estBatchEvents <= 0) splitCap
-            else math.min(splitCap.toLong,
-              1L + estBatchEvents / math.max(1, nGroups) / 32768L).toInt
+          val splits = MultiplexedDelivery.writeSplits(
+            seqNow - lastBatchEventSeq.getAndSet(seqNow), parts, nGroups)
           // Exchange width follows the key space (2× for hash-collision
           // slack, capped at the session parts): nGroups×splits distinct
           // write keys cannot fill more partitions than that, and the
@@ -434,21 +430,8 @@ final class MultiplexedDelivery(val spark: SparkSession,
     table.dropBatchesBefore(math.min(floor, bound))
   }
 
-  /** Hydrate metas into client-facing chunks: ONE pruned read of the
-    * deliveries table covering all requested chunks (consumer pull).
-    * readChunks resolves each meta in whichever layout wrote it —
-    * per-group dirs or the bucketed batch dirs. */
-  private def hydrate(groupId: String, metas: Seq[ChunkMeta]): Seq[DeliveryChunk] = {
-    if (metas.isEmpty) return Seq.empty
-    val payload = table.readChunks(groupId, metas.map(m => (m.chunkId, m.batchId)))
-    metas.map { m =>
-      val (subjects, ids) = payload.getOrElse(m.chunkId, (Seq.empty, Seq.empty))
-      DeliveryChunk(m.groupId, m.chunkId, m.batchId, subjects, ids, m.deliveredAt, m.acked)
-    }
-  }
-
   def pendingChunks(groupId: String): Seq[DeliveryChunk] =
-    hydrate(groupId, ledger.pending(groupId))
+    table.hydrate(groupId, ledger.pending(groupId))
 
   /** R9 attach for the session protocol: the group must exist and the
     * caller must hold a Read grant on its resource (the per-attach
@@ -489,7 +472,7 @@ final class MultiplexedDelivery(val spark: SparkSession,
       dispatcher.offer(groupId, sessionId, metas.map(_.chunkId), max).toSet
     for (st <- store; c <- claimed; f <- dispatcher.flight(groupId, c))
       st.appendOffer(groupId, c, f.sessionId, f.offeredAt, f.deliveries)
-    hydrate(groupId, metas.filter(m => claimed.contains(m.chunkId)))
+    table.hydrate(groupId, metas.filter(m => claimed.contains(m.chunkId)))
   }
 
   /** Pending row count from driver metadata alone (no payload read) —
@@ -558,4 +541,15 @@ object MultiplexedDelivery {
     * (soak-measured, BASELINE.md round-14), rare enough that its
     * listStatus + floor scan is amortized noise. */
   val PayloadRetentionEvery: Int = 64
+
+  /** Files per chunk for a per-group-layout batch write: one per ~32k
+    * rows of the batch's estimated events per group, capped at
+    * `parts / nGroups`. An estimate of zero or less (an idle trigger,
+    * or a batch whose emits the previous delta already counted) writes
+    * ONE file per chunk — an empty or tiny batch needs no fan-out. */
+  def writeSplits(estBatchEvents: Long, parts: Int, nGroups: Int): Int = {
+    val groups = math.max(1, nGroups)
+    math.min(math.max(1, parts / groups).toLong,
+      1L + math.max(0L, estBatchEvents) / groups / 32768L).toInt
+  }
 }

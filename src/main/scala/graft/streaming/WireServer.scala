@@ -72,11 +72,11 @@ object WireAdmin {
   *
   * Scale role: this is the CONTROL plane (subscriptions, acks,
   * chunk-id notification batches) — bounded metadata. The DATA plane
-  * (payload hydration) stays in Spark's distributed tables
-  * ([[DeliveryTable]]); a production deployment terminates many such
-  * connections against the driver exactly like the reference's server
-  * fronts NATS, and the per-connection thread model is sized for that
-  * control-plane load, not for bulk data. */
+  * (chunk payloads) stays in the deliveries table ([[DeliveryTable]]);
+  * a pull reads only its own chunks' files. A production deployment
+  * terminates many such connections against the driver exactly like
+  * the reference's server fronts NATS, and the per-connection thread
+  * model is sized for that control-plane load, not for bulk data. */
 final class WireServer(host: ConsumerHost, admin: WireAdmin,
                        port: Int = 0, maxBatch: Int = Int.MaxValue) {
 

@@ -21,6 +21,9 @@ object LoadCostProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // The spark.read timers below are a deliberate baseline, exempt from
+    // the Tables.load-only rule: set its TIMESTAMP(NANOS) handling here.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     def timeIt(label: String, t: String)(f: String => Any): Unit = {
       val ts = (1 to reps).map { _ =>
         val t0 = System.nanoTime()

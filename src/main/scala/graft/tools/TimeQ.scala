@@ -22,10 +22,7 @@ object TimeQ {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(',').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      b.config(k, v)
-    })
+    sys.env.get("SPARK_GRAFT_CONF").foreach(parseConf(_).foreach { case (k, v) => b.config(k, v) })
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>

@@ -1,7 +1,15 @@
 package graft
 
+import java.io.{File, IOException, RandomAccessFile}
+
+import scala.collection.mutable
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.DeliveryTable
@@ -273,4 +281,190 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.writeCounted("g", "g-1", payload(Seq.empty)) == 0L)
     assert(!new java.io.File(s"$dir/groupId=g/chunkId=g-1").exists)
   }
+
+  // ---- driver-side hydration --------------------------------------------
+
+  /** Spark jobs started by `f` on this thread: they carry the local
+    * property set around `f`, which jobs of other threads never do. A
+    * tagged fence job after `f` bounds the wait: the listener bus
+    * delivers events in order, so once the fence's start is seen every
+    * job `f` started has been counted. */
+  private def jobsStartedBy(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("test.probe") != null)) started.incrementAndGet()
+        if (p.exists(_.getProperty("test.fence") != null)) fenced.countDown()
+      }
+    }
+    def tagged(key: String)(body: => Any): Unit = {
+      sc.setLocalProperty(key, "1")
+      try body finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      tagged("test.probe")(f)
+      tagged("test.fence")(sc.parallelize(Seq(1), 1).count())
+      assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the fence job never reached the listener")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("readChunks starts no Spark job in either layout") {
+    val t = new DeliveryTable(spark, DeliveryTable.tempDir())
+    t.writeMulti(payload((0 until 50).map(i => (s"s$i", s"r$i")))
+      .withColumn("groupId", lit("g3")).withColumn("chunkId", lit("g3-0")), splitsPerChunk = 4)
+    t.writeBucketed(groupBatch(groups = 8, rowsPerGroup = 3, seq = 1), 1L, 4)
+    assert(jobsStartedBy(spark.range(3).collect()) >= 1, "probe wiring: a collect must count")
+    var got = Map.empty[String, (Seq[String], Seq[String])]
+    assert(jobsStartedBy {
+      got = t.readChunks("g3", Seq(("g3-0", 0L), ("g3-1", 1L), ("g3-9", 9L)))
+    } == 0, "hydration must read on the driver")
+    assert(got.keySet == Set("g3-0", "g3-1"))
+    assert(jobsStartedBy(t.read("g3", Seq("g3-0"))) == 0)
+  }
+
+  test("readChunks equals a spark.read oracle over random layouts, split chunks, escaped ids and multi-row-group buckets") {
+    val pool = Seq("g0", "g1", "team a", "a:b", "50%", "k=v", "x y:z%w=q", "g-7")
+    // small row groups: a bucket file of a few hundred rows holds several
+    spark.conf.set("parquet.block.size", "2048")
+    var multiFileChunks = 0
+    var multiGroupFiles = 0
+    try for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val dir = DeliveryTable.tempDir()
+      val t = new DeliveryTable(spark, dir)
+      val written = mutable.ArrayBuffer.empty[(String, String, Long)]
+      for (batch <- 0L until 4L) {
+        val groups = rnd.shuffle(pool).take(1 + rnd.nextInt(pool.size))
+        val rows = groups.flatMap { g =>
+          written += ((g, s"$g-$batch", batch))
+          (0 until rnd.nextInt(300)).map(i => (s"s-$g-$i", s"r$i", g, s"$g-$batch"))
+        }
+        // delivery order is seq, never write order
+        val seqs = rnd.shuffle(rows.indices.map(_.toLong + batch * 10000L))
+        val s = spark
+        import s.implicits._
+        val df = rows.zip(seqs).map { case ((su, r, g, c), q) => (su, r, g, c, q) }
+          .toDF("subject", "resourceId", "groupId", "chunkId", "seq")
+        if (rnd.nextBoolean()) t.writeBucketed(df, batch, 4)
+        else t.writeMulti(df, splitsPerChunk = 1 + rnd.nextInt(4))
+      }
+      val root = new File(dir)
+      multiFileChunks += root.listFiles().filter(_.getName.startsWith("groupId="))
+        .flatMap(_.listFiles()).count(_.listFiles().count(_.getName.endsWith(".parquet")) > 1)
+      val bucketFiles = Option(new File(dir, "batches").listFiles()).toSeq.flatten
+        .filter(_.isDirectory).flatMap(_.listFiles()).filter(_.isDirectory)
+        .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+      multiGroupFiles += bucketFiles.count { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.getPath),
+          spark.sessionState.newHadoopConf()))
+        try r.getRowGroups.size > 1 finally r.close()
+      }
+      // oracle: Spark's own reader over the same dirs, partition values
+      // unescaped by partition discovery
+      val perGroupDirs = root.listFiles().filter(_.getName.startsWith("groupId=")).map(_.getPath)
+      val perGroup =
+        if (perGroupDirs.isEmpty) Seq.empty
+        else spark.read.schema("subject string, resourceId string, seq long, groupId string, chunkId string")
+          .option("basePath", dir).parquet(perGroupDirs.toIndexedSeq: _*)
+          .select("groupId", "chunkId", "subject", "resourceId", "seq").collect().toSeq
+      val bucketed =
+        if (bucketFiles.isEmpty) Seq.empty
+        else spark.read.schema("groupId string, chunkId string, subject string, resourceId string, seq long")
+          .parquet(s"$dir/batches")
+          .select("groupId", "chunkId", "subject", "resourceId", "seq").collect().toSeq
+      val oracle = (perGroup ++ bucketed).groupBy(r => (r.getString(0), r.getString(1)))
+        .map { case (k, rs) =>
+          val o = rs.sortBy(_.getLong(4))
+          k -> ((o.map(_.getString(2)), o.map(_.getString(3))))
+        }
+      val perGroupChunks = perGroup.map(r => (r.getString(0), r.getString(1))).toSet
+      for (g <- pool) {
+        val mine = written.filter(_._1 == g).map { case (_, c, b) => (c, b) }.toSeq
+        val other = written.find(_._1 != g).map { case (_, c, b) => (c, b) }.toSeq
+        val asked = mine ++ other :+ ((s"$g-unknown", 2L))
+        val expect = oracle.collect { case ((`g`, c), v) => c -> v }
+        assert(t.readChunks(g, asked) == expect, s"seed $seed group '$g'")
+        assert(t.read(g, asked.map(_._1)) ==
+          expect.filter { case (c, _) => perGroupChunks((g, c)) }, s"seed $seed group '$g' (read)")
+      }
+    } finally spark.conf.unset("parquet.block.size")
+    assert(multiFileChunks > 0, "test wiring: expected a chunk split over several files")
+    assert(multiGroupFiles > 0, "test wiring: expected a bucket file with several row groups")
+  }
+
+  test("a chunk or bucket dir deleted before or during the read reads as absent, never partial") {
+    val dir = DeliveryTable.tempDir()
+    val w = new DeliveryTable(spark, dir)
+    val rows = (0 until 200).map(i => (f"s$i%03d", f"r$i%03d"))
+    w.writeMulti(payload(rows).withColumn("groupId", lit("g1"))
+      .withColumn("chunkId", lit("g1-0")), splitsPerChunk = 4)
+    w.write("g1", "g1-1", payload(Seq(("sA", "rA"))))
+    (2L to 4L).foreach(s => w.writeBucketed(groupBatch(groups = 8, rowsPerGroup = 3, seq = s), s, 4))
+    val bucket = DeliveryTable.bucketOf("g1", 4)
+    spark.conf.set("fs.vanish.impl", classOf[VanishingFs].getName)
+    val r = new DeliveryTable(spark, s"vanish://$dir")
+    val all = Seq(("g1-0", 0L), ("g1-1", 1L), ("g1-2", 2L), ("g1-3", 3L), ("g1-4", 4L))
+    assert(r.readChunks("g1", all).keySet == all.map(_._1).toSet, "vanish fs wiring")
+    // before: the bucket dir of batch 4 is gone when the pull lists it
+    deleteTree(new File(s"$dir/batches/batch=4/bucket=$bucket"))
+    // during: a part file disappears between the listing and its open
+    VanishingFs.armed.add(s"$dir/groupId=g1/chunkId=g1-0")
+    VanishingFs.armed.add(s"$dir/batches/batch=2/bucket=$bucket")
+    val got = r.readChunks("g1", all)
+    assert(VanishingFs.armed.isEmpty, "both armed dirs must have been listed")
+    assert(got.keySet == Set("g1-1", "g1-3"),
+      "a chunk that lost a file mid-read must be absent, not partial")
+    assert(got("g1-3")._1 == (0 until 3).map(i => f"s1-$i%03d"))
+  }
+
+  test("a truncated part file fails the read loudly and names the file") {
+    val dir = DeliveryTable.tempDir()
+    val t = new DeliveryTable(spark, dir)
+    t.write("g", "g-0", payload((0 until 100).map(i => (s"s$i", s"r$i"))))
+    t.writeBucketed(groupBatch(groups = 8, rowsPerGroup = 3, seq = 1), 1L, 4)
+    def truncate(d: File): String = {
+      val f = d.listFiles().filter(_.getName.endsWith(".parquet")).head
+      val raf = new RandomAccessFile(f, "rw")
+      try raf.setLength(f.length / 2) finally raf.close()
+      new File(d, s".${f.getName}.crc").delete()
+      f.getName
+    }
+    val perGroupFile = truncate(new File(s"$dir/groupId=g/chunkId=g-0"))
+    val e1 = intercept[IOException](t.read("g", Seq("g-0")))
+    assert(e1.getMessage.contains(perGroupFile), e1.getMessage)
+    val bucketFile = truncate(new File(s"$dir/batches/batch=1/bucket=${DeliveryTable.bucketOf("g2", 4)}"))
+    val e2 = intercept[IOException](t.readChunks("g2", Seq(("g2-1", 1L))))
+    assert(e2.getMessage.contains(bucketFile), e2.getMessage)
+  }
+
+  private def deleteTree(f: File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete(); ()
+  }
+}
+
+/** Local filesystem under the `vanish` scheme. Listing a directory
+  * armed in [[VanishingFs.armed]] deletes the listing's last parquet
+  * file right after listing it: the directory changes between a
+  * reader's listing and its opening of the files, as when retention or
+  * a group drop races a pull. */
+class VanishingFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("vanish:///")
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val listed = super.listStatus(f)
+    if (VanishingFs.armed.remove(f.toUri.getPath))
+      listed.filter(_.getPath.getName.endsWith(".parquet")).lastOption
+        .foreach(s => new File(s.getPath.toUri.getPath).delete())
+    listed
+  }
+}
+
+object VanishingFs {
+  val armed: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 }

@@ -524,4 +524,21 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
         s"chunks across the layout switch must all hydrate: $got")
     } finally mux.stop()
   }
+
+  test("write splits: an idle or fully pre-counted batch writes one file per chunk") {
+    import MultiplexedDelivery.writeSplits
+    // no emitted-event delta (idle trigger, or the previous batch's
+    // delta already counted this batch's emits): no fan-out at all
+    for (groups <- Seq(0, 1, 4, 128)) {
+      assert(writeSplits(0L, parts = 32, nGroups = groups) == 1, s"idle, $groups groups")
+      assert(writeSplits(-7L, parts = 32, nGroups = groups) == 1, s"negative delta, $groups groups")
+    }
+    // small batches stay at one file; large ones grow ~1 split per 32k
+    // rows per group up to parts / groups
+    assert(writeSplits(1000L, parts = 32, nGroups = 1) == 1)
+    assert(writeSplits(10L * 32768L, parts = 32, nGroups = 1) == 11)
+    assert(writeSplits(10000000L, parts = 32, nGroups = 1) == 32)
+    assert(writeSplits(10000000L, parts = 32, nGroups = 5) == 6)
+    assert(writeSplits(10000000L, parts = 4, nGroups = 128) == 1)
+  }
 }
