@@ -6,9 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import graft.core.ChunkMeta
 
-/** Bounded driver-side chunk ledger shared by all three delivery
-  * engines ([[EventEngine]], [[MultiplexedDelivery]],
-  * [[DurableEventLog]]).
+/** Bounded driver-side chunk ledger, owned by [[DeliveryCore]] — one
+  * per engine instance, whichever of the three engines it is.
   *
   * The previous design kept every `ChunkMeta` ever minted in one flat
   * `(groupId, chunkId) → meta` map: acked history accumulated forever

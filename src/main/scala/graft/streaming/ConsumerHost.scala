@@ -5,11 +5,11 @@ import graft.core.DeliveryChunk
 /** The delivery surface a bidi session consumes — what the reference's
   * `read_stream_group_messages` loop needs from its broker: an authz'd
   * attach, dispatched pulls, acks, and a close that releases only this
-  * consumer's hold (public_event_server.rs:192-446). Implemented by all
-  * three engines, so one [[EventSession]] protocol object serves the
-  * per-group engine AND the multiplexed/durable scale paths — exactly
-  * how the reference multiplexes many bidi streams over one JetStream
-  * consumer infrastructure.
+  * consumer's hold (public_event_server.rs:192-446). [[DeliveryCore]]
+  * implements it once for all three engines, which supply only what a
+  * last session's close releases — so one [[EventSession]] protocol
+  * object serves every engine, as the reference multiplexes many bidi
+  * streams over one JetStream consumer infrastructure.
   */
 trait ConsumerHost {
   /** Consumer dispatch bookkeeping (sessions, flights, counters). */
@@ -20,13 +20,14 @@ trait ConsumerHost {
     * the pre-session failure path. */
   def attachConsumer(groupId: String, token: Option[String]): Unit
 
-  /** Dispatched pull (see [[EventEngine.pull]] semantics). */
+  /** Dispatched pull (see [[DeliveryCore.pull]] semantics). */
   def pull(groupId: String, sessionId: Long, max: Int = Int.MaxValue): Seq[DeliveryChunk]
 
   def ack(groupId: String, chunkId: String): Boolean
 
-  /** The LAST live session on a group has closed: release per-group
-    * resources. The per-group engine stops the group's delivery query;
-    * shared-query engines keep running (their query serves everyone). */
+  /** The LAST live session on a group has closed (or the group is being
+    * deleted): release per-group resources. Per-group engines stop the
+    * group's delivery query; shared-query engines keep running (their
+    * query serves everyone). */
   def onLastSessionClosed(groupId: String): Unit
 }

@@ -24,12 +24,11 @@ import graft.core.{ChunkMeta, DeliveryChunk}
   *
   *  - **per-group** (`groupId=…/chunkId=…/`): one partition dir per
   *    chunk. Right when few groups match a batch — consumer pulls read
-  *    exactly their own dirs, counts come from footers, drop is an
-  *    `rm -r`. Wrong at thousands of matching groups: each micro-batch
-  *    pays one file + one commit rename PER GROUP (~3 ms each — the
-  *    round-12 floor: 4.8 s/batch at G=2000 against the 250 ms
-  *    trigger), and on an object store those renames are sequential
-  *    driver RPCs.
+  *    exactly their own dirs, drop is an `rm -r`. Wrong at thousands
+  *    of matching groups: each micro-batch pays one file + one commit
+  *    rename PER GROUP (~3 ms each — the round-12 floor: 4.8 s/batch
+  *    at G=2000 against the 250 ms trigger), and on an object store
+  *    those renames are sequential driver RPCs.
   *  - **bucketed** (`batches/batch=<seq>/bucket=<b>/`): per micro-batch,
   *    ONE file per bucket, `b = pmod(xxhash64(groupId), B)` with B ≈
   *    cluster write parallelism — file count and commit renames per
@@ -216,10 +215,10 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     * no second count job (the round-13 fixed two-job cost, VERDICT
     * task 1; the observed node sits post-shuffle in the write's result
     * stage, where accumulator updates are exactly-once — see
-    * CountByKey scaladoc). [[chunkCounts]] (the footer alternative)
-    * costs one filesystem existence probe PER REGISTERED GROUP per
-    * micro-batch — O(G) stat calls whether or not a group matched —
-    * and remains for the single-group engines' shape. */
+    * CountByKey scaladoc). The parquet-footer alternative it replaced
+    * paid one filesystem existence probe PER REGISTERED GROUP per
+    * micro-batch — O(G) stat calls whether or not a group matched — and
+    * lost to this form at every measured G (BASELINE.md round-12). */
   def writeMultiWithCounts(rows: DataFrame, splitsPerChunk: Int = 1,
                            partitions: Int = 0): Map[String, Long] = {
     val obs = org.apache.spark.sql.Observation()
@@ -352,17 +351,6 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     counts
   }
 
-  /** Fixed schema of [[chunkCounts]]' footer-count scan, incl. the
-    * per-group layout's partition columns: no footer-sampling schema
-    * inference, and an existing-but-empty dir reads as empty instead
-    * of failing inference. */
-  private val readSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("subject", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("resourceId", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("seq", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("groupId", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("chunkId", org.apache.spark.sql.types.StringType)))
-
   /** [[readChunks]] for chunks of the PER-GROUP layout only (no batch
     * seq to resolve a bucketed chunk by). */
   def read(groupId: String, chunkIds: Seq[String]): Map[String, (Seq[String], Seq[String])] =
@@ -478,31 +466,6 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
   private def str(g: Group, field: String): String =
     if (g.getFieldRepetitionCount(field) == 0) null else g.getString(field, 0)
 
-  /** Row counts of one batch's just-written chunks from parquet
-    * METADATA only: a filesystem existence probe per candidate group
-    * (groups whose join matched nothing wrote no partition), then one
-    * footer-count job over exactly those chunk directories. This is the
-    * second half of the write-first delivery pattern — the batch is
-    * traversed ONCE (by the payload write); counts come from file
-    * metadata, never from a second pass over the data. PER-GROUP
-    * layout only (the bucketed writer returns counts directly). */
-  def chunkCounts(groupIds: Seq[String], chunkIdFor: String => String): Map[String, Long] = timed("count") {
-    val present = groupIds.filter { g =>
-      fs.exists(new Path(root, s"groupId=${esc(g)}/chunkId=${esc(chunkIdFor(g))}"))
-    }
-    if (present.isEmpty) Map.empty
-    else {
-      val paths = present.map(g =>
-        s"$dir/groupId=${esc(g)}/chunkId=${esc(chunkIdFor(g))}")
-      spark.read.option("basePath", dir).schema(readSchema)
-        .option("ignoreMissingFiles", true).parquet(paths: _*)
-        .groupBy("groupId").count()
-        .collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-        .toMap
-    }
-  }
-
   /** Chunk ids with durable payload rows for a group — the FULL
     * delivery history (acked included) across both layouts. This is
     * the post-eviction history surface: the driver ledger keeps only
@@ -597,7 +560,7 @@ object DeliveryTable {
 
   /** Hive-style partition-value escaping, the SAME function the
     * parquet writer applies when materializing `groupId=…/chunkId=…`
-    * directories — hand-built paths (read/chunkCounts/listChunks/drop)
+    * directories — hand-built paths (read/listChunks/drop)
     * must escape identically or a group id containing ' ', ':', '%',
     * '=' … resolves to a directory that never exists and the pull
     * silently returns empty. */

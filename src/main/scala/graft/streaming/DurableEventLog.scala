@@ -43,18 +43,14 @@ import graft.core._
   * re-read old batches, so compaction does not disturb them.
   * Strategy (c) is implemented: [[compactTo]] + [[archiveScan]].
   */
-final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: String,
+final class DurableEventLog(spark: SparkSession, logDir: String, ckptRoot: String,
                             trigger: Trigger = Trigger.ProcessingTime("250 milliseconds"),
                             security: EngineSecurity = EngineSecurity.Permissive,
                             ackWaitMillis: Long = 30000L,
                             clock: () => Long = () => System.currentTimeMillis())
-    extends ConsumerHost {
+    extends DeliveryCore(spark, security, ackWaitMillis, clock,
+      Some(s"$ckptRoot/ledger"), s"$ckptRoot/deliveries") {
   import spark.implicits._
-
-  /** Consumer dispatch (ack-wait redelivery, competing consumers,
-    * bounded pull batches) — the same [[ChunkDispatcher]] the other two
-    * engines use; flights journal to this engine's always-on WAL. */
-  val dispatcher = new ChunkDispatcher(ackWaitMillis, clock)
 
   private val source =
     org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event](spark, numPartitions = 1)
@@ -62,30 +58,6 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
   @volatile private var ingestQuery: Option[StreamingQuery] = None
   private val deliveries: concurrent.Map[String, StreamingQuery] =
     new ConcurrentHashMap[String, StreamingQuery]().asScala
-  /** Bounded metadata ledger (pending per group; acked history evicted
-    * behind a per-group watermark — see [[ChunkLedger]]). */
-  private val ledger = new ChunkLedger
-  /** Metrics hook: the engine's chunk ledger, for
-    * [[EngineMetrics.watchLedger]] stuck-watermark monitoring. */
-  def chunkLedger: ChunkLedger = ledger
-  /** WAL-backed chunk/ack METADATA — replayed on construction so pending
-    * (unacked) chunks survive a process restart (see LedgerStore).
-    * Payloads are durable in [[DeliveryTable]] parquet under ckptRoot,
-    * written by executors — the driver holds ids+counts only. */
-  private val store = new LedgerStore(s"$ckptRoot/ledger")
-  locally {
-    ledger.beginLoad()
-    val (metas, wms) = store.loadState()
-    wms.foreach { case (g, w) => ledger.restoreWatermark(g, w) }
-    metas.values.foreach { m =>
-      if (m.acked) ledger.restoreAcked(m) else { ledger.record(m); () }
-    }
-    ledger.settleLoad()
-    store.loadFlights().foreach { case ((g, c), (s, at, d)) =>
-      dispatcher.restore(g, c, s, at, d)
-    }
-  }
-  private val table = new DeliveryTable(spark, s"$ckptRoot/deliveries")
 
   /** Log row schema; `project` is the physical partition column.
     * `eventId`/`spos` are the content-derived message identity
@@ -103,8 +75,7 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
 
   def emit(resource: ResourceType, eventType: String, resourceId: String,
            relation: RelationCtx, token: Option[String] = None): Unit = {
-    security.requireInternal(token)
-    Subjects.requireValidId(resourceId, "resourceId")
+    admit(resource, resourceId, relation, token)
     // Serialize the row-encode (see MultiplexedDelivery.emit): the
     // memory source's serializer reuses one UnsafeRow buffer and
     // concurrent wire-connection emitters would tear rows otherwise.
@@ -209,31 +180,9 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
       .option("checkpointLocation", s"$ckptRoot/delivery-$groupId")
       .trigger(deliveryTrigger)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // Idempotent on foreachBatch replay: if the (groupId, chunkId)
-        // key is already in the ledger (this batch was delivered before a
-        // restart — possibly already acked), keep the existing entry;
-        // re-appending the WAL record would resurrect acked chunks. The
-        // payload write is dynamic-partition-overwrite, so a replayed
-        // write rewrites identical content rather than duplicating it.
-        // Write-first: one pass (the write — an empty batch writes no
-        // partitions), then the count from the written parquet footers.
-        val chunkId = s"$groupId-$batchId"
-        if (!ledger.isKnown(groupId, chunkId, batchId)) {
-          // writeCounted sizes the file split to the batch (one file for
-          // a steady-state micro-batch, full width for a replay burst)
-          // and returns the row count from the same cached pass — no
-          // footer job, no fixed parts-many files per chunk (round-12
-          // ADVICE).
-          val n = table.writeCounted(groupId, chunkId,
-            batch.select(col("subject"), col("resourceId"), FanOut.seqCol.as("seq")))
-          if (n > 0L) {
-            val meta = ChunkMeta(groupId, chunkId, batchId, n,
-              new Timestamp(System.currentTimeMillis()), acked = false)
-            if (ledger.record(meta)) store.appendChunk(meta) // WAL after payload
-            ()
-          }
-        }
-        ()
+        // the checkpointed batch id is itself restart-stable: chunk
+        // `groupId-batchId`, skipped when already in the ledger
+        writeChunk(groupId, batchId, batch)
       }
       .start()
     deliveries.put(groupId, q)
@@ -242,60 +191,28 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
   def stopDelivery(groupId: String): Unit =
     deliveries.remove(groupId).foreach(_.stop())
 
-  // ---- multiplexed mode: ONE checkpointed query for all groups ------
-
-  private val groups: concurrent.Map[String, StreamGroup] =
-    new ConcurrentHashMap[String, StreamGroup]().asScala
-
-  def addGroup(groupId: String, resourceType: ResourceType, resourceId: String,
-               hierarchy: Hierarchy, includeSubresources: Boolean,
-               eventType: String = EventType.All,
-               token: Option[String] = None): StreamGroup =
-    addGroupMulti(groupId, resourceType, resourceId, Seq(hierarchy),
-      includeSubresources, eventType, token)
-
-  /** Multi-hierarchy registration — union-of-matchers semantics, see
-    * [[MultiplexedDelivery.addGroupMulti]]. */
-  def addGroupMulti(groupId: String, resourceType: ResourceType, resourceId: String,
-                    hierarchies: Seq[Hierarchy], includeSubresources: Boolean,
-                    eventType: String = EventType.All,
-                    token: Option[String] = None): StreamGroup = {
-    require(hierarchies.nonEmpty,
-      s"stream group $groupId needs at least one hierarchy (public_event_server.rs:145-152)")
-    security.requireRead(token, resourceType, resourceId)
-    val filters = hierarchies
-      .map(Subjects.queryFor(resourceType, resourceId, _, includeSubresources))
-      .distinct
-    val g = StreamGroup(groupId, resourceType.name, resourceId, eventType,
-      includeSubresources, filters.head, filters.tail)
-    require(groups.putIfAbsent(groupId, g).isEmpty,
-      s"stream group $groupId already exists")
-    g
-  }
-
-  def removeGroup(groupId: String): Unit = groups.remove(groupId)
-
-  /** R9 attach for the session protocol: the group must be registered
-    * and the caller authorized; ensures its per-group delivery query is
-    * running (restarting from the same checkpoint resumes, never
-    * reprocesses). Groups served by [[startMultiplexed]] are covered by
-    * the shared query already. */
-  override def attachConsumer(groupId: String, token: Option[String]): Unit = {
-    val g = groups.getOrElse(groupId,
-      throw new NoSuchElementException(s"unknown stream group $groupId"))
-    security.requireRead(token, ResourceType.fromName(g.resourceType), g.resourceId)
-    if (!deliveries.contains(groupId) && !deliveries.contains("__mux__"))
-      startDeliveryMulti(groupId, g.filterSubjects, eventType = g.eventType)
-  }
+  /** R9 attach: ensures the group's per-group delivery query is running
+    * (restarting from the same checkpoint resumes, never reprocesses).
+    * Groups served by [[startMultiplexed]] are covered by the shared
+    * query already. */
+  override protected def ensureDelivery(group: StreamGroup): Unit =
+    if (!deliveries.contains(group.id) && !deliveries.contains("__mux__"))
+      startDeliveryMulti(group.id, group.filterSubjects, eventType = group.eventType)
 
   /** The durable engine keeps per-group checkpoints; stopping the query
-    * on last-session close releases the cluster resources while the
-    * checkpoint guarantees a later attach resumes exactly. */
+    * on last-session close (or group delete) releases the cluster
+    * resources while the checkpoint guarantees a later attach resumes
+    * exactly. A deleted group's checkpoint is kept too: a same-id
+    * re-create resumes after the old position, so its chunk ids never
+    * reuse a journaled one (the drop itself is not journaled). */
   override def onLastSessionClosed(groupId: String): Unit = stopDelivery(groupId)
 
+  // ---- multiplexed mode: ONE checkpointed query for all groups ------
+
   /** One delivery query for ALL registered groups, reading the log from
-    * a single shared checkpoint. Join = pure equi-join on candidate
-    * match keys ([[Subjects.matchKeysCol]]), as in MultiplexedDelivery.
+    * a single shared checkpoint; each batch goes through the shared
+    * multi-group writer ([[DeliveryCore.writeGroups]]) with chunk ids
+    * `group-batchId`.
     *
     * Semantics difference vs per-group mode, by design:
     *  - per-group [[startDelivery]] owns a fresh checkpoint → a new
@@ -307,7 +224,6 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
   def startMultiplexed(retentionEvery: Int =
                          MultiplexedDelivery.PayloadRetentionEvery): Unit = synchronized {
     require(!deliveries.contains("__mux__"), "multiplexed delivery already running")
-    val muxBatches = new AtomicLong(0L)
     val q = spark.readStream
       .schema(logSchema)
       .parquet(logDir)
@@ -317,82 +233,10 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
       .option("checkpointLocation", s"$ckptRoot/mux")
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val snapshot = groups.values.toSeq
-        // No batch.isEmpty pre-check: that is a full extra pass on the
-        // common (non-empty) path; the per-group counts below cost the
-        // same on an empty batch and gate the write anyway.
-        if (snapshot.nonEmpty) {
-          // One row per (group, filter subject); multi-hierarchy groups
-          // get union-of-matchers with once-per-message dedup — same
-          // rule as MultiplexedDelivery's batch join.
-          val anyMulti = snapshot.exists(_.extraFilterSubjects.nonEmpty)
-          val subs = snapshot
-            .flatMap(g => g.filterSubjects.map(fs => (g.id, fs, g.eventType)))
-            .toDF("id", "joinKey", "subEventType")
-          val subtreeDepths = snapshot.flatMap(_.filterSubjects)
-            .flatMap(Subjects.subtreeDepth).distinct.sorted
-          // Write-first: ONE distributed pass (join → partitioned payload
-          // write) serves every group; per-group counts then come from
-          // parquet FOOTERS of the just-written chunk dirs, never from a
-          // second pass over the batch. A replayed batch rewrites its own
-          // partitions (dynamic overwrite) — idempotent — and the ledger
-          // guard below keeps an existing (possibly acked) meta intact.
-          // Multi-matcher dedup on CONTENT-derived message identity
-          // (never monotonically_increasing_id — round-13 ADVICE; see
-          // MultiplexedDelivery). eventId restarts per incarnation and
-          // a backfill batch can span incarnations, so the key also
-          // carries resourceId/eventType/ts (logSchema scaladoc).
-          // Pure equi-join on candidate match keys — same O(G)-free
-          // form as MultiplexedDelivery (Subjects.matchKeysCol scaladoc);
-          // the project-token equi + matchesCol residual it replaces
-          // left every same-project subscription a per-row candidate.
-          val joined = batch
-            .select(col("subject"), col("resourceId"), col("eventType"),
-              col("eventId"), col("spos"), col("ts"))
-            .withColumn("joinKey",
-              explode(Subjects.matchKeysCol(col("subject"), subtreeDepths)))
-            .join(broadcast(subs), "joinKey")
-            .filter(Subjects.eventTypeMatches(col("eventType"), col("subEventType")))
-          val matched =
-            (if (anyMulti)
-               joined.dropDuplicates("id", "eventId", "spos", "resourceId", "eventType", "ts")
-             else joined)
-              .select(col("id").as("groupId"), col("subject"),
-                col("resourceId"), FanOut.seqCol.as("seq"))
-          val withChunk = matched
-            .withColumn("chunkId", concat(col("groupId"), lit(s"-$batchId")))
-          // Layout + count regimes — see MultiplexedDelivery (bucketed
-          // past BucketedMinGroups registered groups: O(parts) files per
-          // batch instead of one per matching group);
-          // write-parallelism hint — see DeliveryTable.prepare.
-          val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-          val counts =
-            if (snapshot.size >= MultiplexedDelivery.BucketedMinGroups)
-              table.writeBucketed(withChunk, batchId, parts)
-            else if (snapshot.size > MultiplexedDelivery.FooterCountMaxGroups)
-              table.writeMultiWithCounts(withChunk,
-                math.max(1, parts / math.max(1, snapshot.size)))
-            else {
-              table.writeMulti(withChunk,
-                math.max(1, parts / math.max(1, snapshot.size)))
-              table.chunkCounts(snapshot.map(_.id), g => s"$g-$batchId")
-            }
-          counts.foreach { case (gid, n) =>
-            val chunkId = s"$gid-$batchId"
-            val meta = ChunkMeta(gid, chunkId, batchId, n,
-              new Timestamp(System.currentTimeMillis()), acked = false)
-            if (ledger.record(meta)) store.appendChunk(meta)
-          }
-          // automated bucketed retention — same cadence + restart-safety
-          // story as MultiplexedDelivery (round-13 verdict task 4)
-          if (retentionEvery > 0
-              && snapshot.size >= MultiplexedDelivery.BucketedMinGroups
-              && muxBatches.get % retentionEvery == (retentionEvery - 1L)) {
-            compactPayloads(); ()
-          }
-        }
-        muxBatches.incrementAndGet()
-        ()
+        // no driver-side size estimate for a log-file batch: the split
+        // count takes its parts / nGroups cap
+        writeGroups(batch, batchId, Long.MaxValue,
+          MultiplexedDelivery.BucketedMinGroups, retentionEvery)
       }
       .start()
     deliveries.put("__mux__", q)
@@ -472,72 +316,10 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
       val meta = ChunkMeta(groupId, chunkId, batchId = -(k + 1L),
         math.min(chunkRows.toLong, n - k.toLong * chunkRows),
         new Timestamp(System.currentTimeMillis()), acked = false)
-      if (ledger.record(meta)) {
-        store.appendChunk(meta)
-        created += 1
-      }
+      if (record(meta)) created += 1
     }
     created
   }
-
-  /** WAL hygiene: rewrite the chunk/ack ledger to minimal equivalent
-    * state (see LedgerStore.compact) — pairs with [[compactTo]] for the
-    * event log itself. */
-  def compactLedger(): Unit = store.compact()
-
-  /** Bucketed-payload retention for the multiplexed mode — see
-    * [[MultiplexedDelivery.compactPayloads]] (same floor: every
-    * group's lowest pending chunk, bounded by the highest minted seq
-    * so an in-flight batch's payload is never reclaimed pre-record). */
-  def compactPayloads(): Int = {
-    // floor over the LEDGER, not the registration map: a WAL restart
-    // restores pending metas before their groups are re-registered, and
-    // those chunks' batches must survive retention (ChunkLedger scaladoc).
-    // maxBatchId FIRST, pending floor second — the reverse order is a
-    // TOCTOU against a micro-batch recording its meta between the two
-    // reads (see MultiplexedDelivery.compactPayloads).
-    val maxMinted = ledger.maxBatchId
-    val floor = ledger.minPendingBatchId
-    val bound =
-      if (maxMinted == Long.MinValue) Long.MinValue else maxMinted + 1
-    table.dropBatchesBefore(math.min(floor, bound))
-  }
-
-  def pendingChunks(groupId: String): Seq[DeliveryChunk] =
-    table.hydrate(groupId, ledger.pending(groupId))
-
-  /** Consumer pull with JetStream semantics (see [[EventEngine.pull]]):
-    * disjoint claims across competing sessions, ack-wait redelivery
-    * with the same chunkId, bounded batches; every claim journals its
-    * flight so the redelivery timer survives restart. */
-  def pull(groupId: String, sessionId: Long,
-           max: Int = Int.MaxValue): Seq[DeliveryChunk] = {
-    val metas = ledger.pending(groupId)
-    val claimed =
-      dispatcher.offer(groupId, sessionId, metas.map(_.chunkId), max).toSet
-    for (c <- claimed; f <- dispatcher.flight(groupId, c))
-      store.appendOffer(groupId, c, f.sessionId, f.offeredAt, f.deliveries)
-    table.hydrate(groupId, metas.filter(m => claimed.contains(m.chunkId)))
-  }
-
-  /** Pending row count from driver metadata alone (no payload read). */
-  def pendingRowCount(groupId: String): Long = ledger.pendingRows(groupId)
-
-  /** All chunks ever delivered (acked history re-listed from the
-    * durable payload table — see [[EventEngine.historyMetas]]). */
-  def deliveredChunks(groupId: String): Seq[DeliveryChunk] =
-    table.hydrate(groupId, EventEngine.historyMetas(
-      groupId, ledger.pending(groupId), ledger.ackedResident(groupId),
-      table.listChunks(groupId)))
-
-  def ack(groupId: String, chunkId: String): Boolean =
-    ledger.ack(groupId, chunkId) match {
-      case Some(_) =>
-        store.appendAck(groupId, chunkId)
-        dispatcher.settle(groupId, chunkId)
-        true
-      case None => false // unknown id or duplicate ack
-    }
 
   def processAllAvailable(): Unit = {
     ingestQuery.foreach(_.processAllAvailable())

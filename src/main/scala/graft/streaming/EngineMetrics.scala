@@ -15,9 +15,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *  - progress: batches seen, cumulative input rows, latest
   *    rows/second and batch duration per query (the backpressure /
   *    throughput signals an operator watches at scale);
-  *  - terminations: queries that died keep their exception string, so
-  *    a supervisor can re-attach ([[EventEngine.attach]] restarts a
-  *    closed group) or alert.
+  *  - terminations: queries that died keep their exception string under
+  *    the query's name — the key its progress uses — so a supervisor
+  *    can re-attach ([[DeliveryCore.attach]] restarts a closed group) or
+  *    alert (the reference's bounded error channel,
+  *    public_event_server.rs:325,394-401, feeds failures back into the
+  *    client stream instead).
   *
   * Listener callbacks arrive on Spark's listener bus (asynchronous);
   * readers see eventually-consistent snapshots.
@@ -34,9 +37,17 @@ final class EngineMetrics extends StreamingQueryListener {
 
   private val stats: concurrent.Map[String, QueryStats] =
     new ConcurrentHashMap[String, QueryStats]().asScala
+  /** Run id → query name as seen at start: the terminated event carries
+    * no name, and a failure must land on the same key as the progress.
+    * Keyed by run, not query id: a query restarted from its checkpoint
+    * keeps its id, and its old run's termination may arrive after the
+    * new run started. */
+  private val names: concurrent.Map[java.util.UUID, String] =
+    new ConcurrentHashMap[java.util.UUID, String]().asScala
 
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
     val name = Option(e.name).getOrElse(e.id.toString)
+    names.put(e.runId, name)
     stats.put(name, QueryStats(name, 0L, 0L, 0.0, 0L, None))
     ()
   }
@@ -55,10 +66,8 @@ final class EngineMetrics extends StreamingQueryListener {
   }
 
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
-    // the terminated event carries no name — record under the query id
-    // (started/progress entries keyed by name stay untouched)
+    val name = names.remove(e.runId).getOrElse(e.id.toString)
     e.exception.foreach { err =>
-      val name = e.id.toString
       stats.put(name, stats.getOrElse(name,
         QueryStats(name, 0L, 0L, 0.0, 0L, None)).copy(error = Some(err)))
     }
@@ -68,7 +77,7 @@ final class EngineMetrics extends StreamingQueryListener {
   /** Snapshot of every query seen so far (running or terminated). */
   def snapshot: Map[String, QueryStats] = stats.toMap
 
-  /** Queries that terminated with an exception → its message. */
+  /** Queries that terminated with an exception: name → its message. */
   def failures: Map[String, String] =
     stats.collect { case (k, s) if s.error.isDefined => k -> s.error.get }.toMap
 

@@ -4,16 +4,16 @@ import graft.core._
 
 /** R13 — the bidi session protocol of
   * `read_stream_group_messages` (public_event_server.rs:192-446),
-  * re-expressed as a synchronous protocol object over any
-  * [[ConsumerHost]] — the per-group [[EventEngine]], the multiplexed
-  * scale path ([[MultiplexedDelivery]]), or the durable log
-  * ([[DurableEventLog]]) all serve the same protocol:
+  * re-expressed as a synchronous protocol object over a
+  * [[ConsumerHost]] — the shared [[DeliveryCore]], so the per-group
+  * [[EventEngine]], the multiplexed scale path ([[MultiplexedDelivery]])
+  * and the durable log ([[DurableEventLog]]) serve one protocol:
   *
   *  - the FIRST inbound message must be `Init{stream_group_id}`; an Ack
   *    before Init is rejected ("an init message needs to be send before
   *    any ack message", :234-240), as is a missing group (:249-270) or
   *    a caller without a Read grant on the group's resource (the authz
-  *    re-check of :273-301 — [[EventEngine.attach]] performs it);
+  *    re-check of :273-301 — [[ConsumerHost.attachConsumer]] performs it);
   *  - later `Ack{ack_chunk_id[]}` messages settle delivered chunks and
   *    the session answers with whatever is pending (the pull analog of
   *    the reference's push loop — micro-batch delivery fills the

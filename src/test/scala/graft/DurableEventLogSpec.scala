@@ -126,6 +126,47 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally log.stop()
   }
 
+  test("emit rejects a dotted relation id and an unpublishable resource type; nothing is delivered") {
+    val (logDir, ckpt) = (tmp(), tmp())
+    val log = new DurableEventLog(spark, logDir, ckpt)
+    try {
+      log.startIngest()
+      log.startDelivery("g", graft.core.Subjects.projectQuery("p1", includeSub = true))
+      intercept[IllegalArgumentException](
+        log.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1.x")))
+      intercept[IllegalArgumentException](
+        log.emit(ResourceType.All, EventType.All, "p1", RelationCtx()))
+      log.processAllAvailable()
+      assert(log.pendingChunks("g").isEmpty, "a rejected emit must deliver nothing")
+      log.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
+      log.processAllAvailable()
+      assert(log.pendingChunks("g").flatMap(_.resourceIds) == Seq("c1"))
+    } finally log.stop()
+  }
+
+  test("group delete stops its delivery and drops its chunks; a same-id re-create serves the new filter") {
+    val (logDir, ckpt) = (tmp(), tmp())
+    val log = new DurableEventLog(spark, logDir, ckpt)
+    try {
+      log.startIngest()
+      log.addGroup("g", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+      log.attachConsumer("g", None) // starts the group's own delivery query
+      log.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
+      log.processAllAvailable()
+      assert(log.pendingChunks("g").flatMap(_.resourceIds) == Seq("p1"))
+
+      log.removeGroup("g")
+      assert(log.pendingChunks("g").isEmpty, "delete must drop the group's pending chunks")
+      log.addGroup("g", ResourceType.Project, "p2", Hierarchy(projectId = "p2"), true)
+      log.attachConsumer("g", None)
+      log.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
+      log.emit(ResourceType.Project, EventType.All, "p2", RelationCtx())
+      log.processAllAvailable()
+      assert(log.pendingChunks("g").flatMap(_.resourceIds) == Seq("p2"),
+        "the re-created group must be served by its new filter only")
+    } finally log.stop()
+  }
+
   test("WAL ledger: pending chunks and acks survive an engine restart") {
     val (logDir, ckpt) = (tmp(), tmp())
     val log1 = new DurableEventLog(spark, logDir, ckpt)

@@ -63,6 +63,8 @@ class EngineMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with Eventual
       assert(metrics.failures.values.exists(_.contains("boom")),
         s"the doomed query's exception must be retained, got ${metrics.failures}")
     }
+    assert(metrics.failures.get("doomed").exists(_.contains("boom")),
+      s"the failure must be keyed by the query's name, like its progress: ${metrics.failures}")
   }
 
   test("a stuck watermark trips the ledger gauge; healthy groups stay silent") {

@@ -260,32 +260,56 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally mux.stop()
   }
 
-  test("footer and aggregation count regimes deliver identical chunks") {
-    def runWith(threshold: Int): Map[String, Seq[(String, Long)]] = {
-      val mux = new MultiplexedDelivery(spark, footerCountMaxGroups = threshold)
-      try {
-        mux.addGroup("t1", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
-        mux.addGroup("t2", ResourceType.Collection, "c1",
-          Hierarchy(projectId = "p1", collectionId = "c1"), true)
-        mux.addGroup("t3", ResourceType.Project, "p2", Hierarchy(projectId = "p2"), false)
-        mux.start()
-        mux.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
-        mux.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
-        mux.processAllAvailable()
-        mux.emit(ResourceType.Project, EventType.All, "p2", RelationCtx())
-        mux.emit(ResourceType.Object, EventType.All, "o1",
+  test("per-group layout: each group's chunks carry exactly its matches, counted by the write") {
+    val mux = new MultiplexedDelivery(spark)
+    try {
+      mux.addGroup("t1", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+      mux.addGroup("t2", ResourceType.Collection, "c1",
+        Hierarchy(projectId = "p1", collectionId = "c1"), true)
+      mux.addGroup("t3", ResourceType.Project, "p2", Hierarchy(projectId = "p2"), false)
+      // emitted before start: the first micro-batch holds both events
+      mux.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
+      mux.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
+      mux.start()
+      mux.processAllAvailable()
+      // one offset: the second micro-batch holds both events
+      mux.emitAll(Seq(
+        Event(ResourceType.Project, EventType.All, "p2", RelationCtx(), new java.sql.Timestamp(0L)),
+        Event(ResourceType.Object, EventType.All, "o1",
           RelationCtx(project = "p1", collection = "c1", sharedObject = "s1",
-            objectGroups = Seq("g1")))
-        mux.processAllAvailable()
-        Seq("t1", "t2", "t3").map { g =>
-          g -> mux.pendingChunks(g).map(c => (c.resourceIds.sorted.mkString(","),
-            c.resourceIds.size.toLong))
-        }.toMap
-      } finally mux.stop()
-    }
-    val footer = runWith(Int.MaxValue) // always parquet footers
-    val agg = runWith(0)               // always cached-batch aggregation
-    assert(footer == agg, s"count regimes diverged:\n$footer\nvs\n$agg")
+            objectGroups = Seq("g1")), new java.sql.Timestamp(0L))))
+      mux.processAllAvailable()
+      val got = Seq("t1", "t2", "t3").map { g =>
+        g -> mux.pendingChunks(g).map(c => (c.resourceIds.sorted.mkString(","),
+          c.resourceIds.size.toLong))
+      }.toMap
+      // the object event fans out to its object-group subject and its
+      // own subject, both inside the p1 and c1 subtrees
+      assert(got == Map(
+        "t1" -> Seq(("c1,p1", 2L), ("o1,o1", 2L)),
+        "t2" -> Seq(("c1", 1L), ("o1,o1", 2L)),
+        "t3" -> Seq(("p2", 1L))), s"unexpected chunks: $got")
+      assert(Seq("t1", "t2", "t3").map(mux.pendingRowCount) == Seq(4L, 3L, 1L),
+        "ledger row counts must equal the written rows")
+    } finally mux.stop()
+  }
+
+  test("emit rejects a dotted relation id and an unpublishable resource type; nothing is delivered") {
+    val mux = new MultiplexedDelivery(spark)
+    try {
+      mux.addGroup("g", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+      mux.start()
+      // "p1.x" would publish under p1's subtree; ALL fans out to nothing
+      intercept[IllegalArgumentException](
+        mux.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1.x")))
+      intercept[IllegalArgumentException](
+        mux.emit(ResourceType.All, EventType.All, "p1", RelationCtx()))
+      mux.processAllAvailable()
+      assert(mux.pendingChunks("g").isEmpty, "a rejected emit must deliver nothing")
+      mux.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
+      mux.processAllAvailable()
+      assert(mux.pendingChunks("g").flatMap(_.resourceIds) == Seq("c1"))
+    } finally mux.stop()
   }
 
   test("multi-hierarchy group through the mux join: union of matchers, once-per-message dedup path") {
